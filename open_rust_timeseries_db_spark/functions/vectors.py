@@ -106,17 +106,6 @@ def dot_fx_pd(a: Column | str, b: Column | str) -> Column:
     return _DOT_FX_PD(a, b)
 
 
-def norm2_fx_raw(a: Column | str) -> Column:
-    """Fixed-point squared-norm as the raw BIGINT sum (scale 1e12).
-
-    Compute this ONCE per vector (it is a JVM fold, fine at
-    one-eval-per-row) and carry it through the pair join.
-    """
-    a = F.col(a) if isinstance(a, str) else a
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return _fx_sum(sq)
-
-
 def cosine_from_parts(dot_raw: Column, n2a_raw: Column, n2b_raw: Column) -> Column:
     """cos from raw BIGINT fx parts — mirrors the oracle formula
     (dot/1e12) / (sqrt(n2a/1e12) * sqrt(n2b/1e12)) op for op."""
@@ -584,12 +573,6 @@ def blocked_neardup(
 
 
 # DuckDB oracle fragments (kept adjacent to the Spark implementations).
-# ``elems`` is expected as: SELECT vec_id, label, unnest(embedding) AS e,
-# generate_subscripts(embedding, 1) AS i FROM embeddings.
-SQL_ELEMS = (
-    "SELECT vec_id, label, unnest(embedding) AS e, "
-    "generate_subscripts(embedding, 1) AS i FROM embeddings"
-)
 
 
 def sql_fx_sum(expr: str) -> str:

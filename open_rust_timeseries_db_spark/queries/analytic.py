@@ -22,6 +22,7 @@ from open_rust_timeseries_db_spark.queries.helpers import (
 )
 from open_rust_timeseries_db_spark.queries.registry import DEC, query
 from open_rust_timeseries_db_spark.sources.catalog import load_table
+from open_rust_timeseries_db_spark.sources.layout import DAY_US
 
 _GAP_US = 300_000_000  # 5-minute session gap
 
@@ -454,7 +455,7 @@ def _heavy_hitters_oracle() -> str:
     "q_heavy_hitters",
     _heavy_hitters_oracle(),
     doc="Count-min heavy hitters: the hot-key detector that sizes skew "
-    "mitigation (operators/skew.py salting, the LSH hot-bucket splits) "
+    "mitigation (the LSH hot-bucket salting in operators/dedupe.py) "
     "before a 100 TB join. The sketch grid is DEPTH x WIDTH cells "
     "regardless of input size, builds in one fully-parallel pass "
     "(map-side combine collapses each task to the grid before the "
@@ -865,9 +866,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DAY_US_A = 86_400_000_000
-
-
 @query(
     "q_event_funnel",
     """
@@ -1122,7 +1120,7 @@ def event_funnel_bounded_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_retention_cohorts",
     f"""
     WITH d AS (
-      SELECT user_id, epoch_us(ts) // {_DAY_US_A} AS day FROM events
+      SELECT user_id, epoch_us(ts) // {DAY_US} AS day FROM events
     ), f AS (
       SELECT user_id, MIN(day) AS cohort_day FROM d GROUP BY user_id
     )
@@ -1146,7 +1144,7 @@ def event_funnel_bounded_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = events_us(spark, sf_dir).select(
-        "user_id", F.expr(f"ts_us div {_DAY_US_A}").alias("day")
+        "user_id", F.expr(f"ts_us div {DAY_US}").alias("day")
     )
     cohort = d.withColumn(
         "cohort_day", F.min("day").over(Window.partitionBy("user_id"))

@@ -37,9 +37,7 @@ from open_rust_timeseries_db_spark.queries.helpers import (
 )
 from open_rust_timeseries_db_spark.queries.registry import query
 from open_rust_timeseries_db_spark.sources.catalog import load_table
-
-_HOUR_US = 3_600_000_000
-_DAY_US = 86_400_000_000
+from open_rust_timeseries_db_spark.sources.layout import DAY_US, HOUR_US
 
 _ORD_SQL = "epoch_us(ts) * 1000 + event_id % 1000"
 # 3 * 1.4826 (the normal-consistency MAD multiplier), pre-folded to ONE
@@ -141,7 +139,7 @@ def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_bollinger_bands",
     f"""
     WITH e AS (
-      SELECT user_id, epoch_us(ts) // {_HOUR_US} AS bucket_hour,
+      SELECT user_id, epoch_us(ts) // {HOUR_US} AS bucket_hour,
              CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT) AS vfx,
              {_ORD_SQL} AS ord
       FROM events
@@ -186,7 +184,7 @@ def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_us(spark, sf_dir).select(
         "user_id",
-        F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"),
+        F.expr(f"ts_us div {HOUR_US}").alias("bucket_hour"),
         _scaled_long(F.col("value")).alias("vfx"),
         (F.col("ts_us") * 1000 + F.col("event_id") % 1000).alias("ord"),
     )
@@ -244,7 +242,7 @@ def q_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_rolling_wau",
     f"""
     WITH ud AS (
-      SELECT DISTINCT user_id, epoch_us(ts) // {_DAY_US} AS day
+      SELECT DISTINCT user_id, epoch_us(ts) // {DAY_US} AS day
       FROM events
     ), win AS (
       SELECT DISTINCT user_id, day + o.off AS day
@@ -268,7 +266,7 @@ def q_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_us(spark, sf_dir)
     ud = ev.select(
         "user_id",
-        F.expr(f"ts_us div {_DAY_US}").alias("day"),
+        F.expr(f"ts_us div {DAY_US}").alias("day"),
     ).distinct()
     win = ud.select(
         "user_id",
@@ -416,9 +414,6 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "ts_us", "value", "med", "mad")
     )
-
-
-_DECILE_CUTS = [(f"c{i}", i / 10.0) for i in range(1, 10)]
 
 
 @query(

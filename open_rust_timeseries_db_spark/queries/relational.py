@@ -29,6 +29,7 @@ from open_rust_timeseries_db_spark.queries.helpers import (
 )
 from open_rust_timeseries_db_spark.queries.registry import DEC, query
 from open_rust_timeseries_db_spark.sources.catalog import load_table
+from open_rust_timeseries_db_spark.sources.layout import DAY_US
 
 
 @query(
@@ -199,7 +200,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both sides are subsets of ONE events scan — the same-source
     # operator tags rows in the scan projection instead of scanning
-    # twice and unioning (2.6x faster cold at sf1, scripts/asof_probe.py;
+    # twice and unioning (2.6x faster cold at sf1, fba4191:scripts/asof_probe.py;
     # equality vs the two-sided operator is hypothesis-tested). The
     # input is the session-cached conversion projection (key-partitioned
     # + sorted), so the window plans exchange-free.
@@ -553,7 +554,6 @@ def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CAL_DAY_US = 86_400_000_000
 # Recursion step for the calendar spine: each UnionLoop iteration is a
 # scheduled Spark job, so the spine recurses in chunks and expands each
 # chunk declaratively — depth span/16 instead of span.
@@ -564,8 +564,8 @@ _CAL_STEP_DAYS = 16
     "q_recursive_calendar",
     f"""
     WITH RECURSIVE chunk(lo, hi) AS (
-      SELECT MIN(epoch_us(ts) // {_CAL_DAY_US}),
-             MAX(epoch_us(ts) // {_CAL_DAY_US})
+      SELECT MIN(epoch_us(ts) // {DAY_US}),
+             MAX(epoch_us(ts) // {DAY_US})
       FROM events
       UNION ALL
       SELECT lo + {_CAL_STEP_DAYS}, hi FROM chunk
@@ -575,11 +575,11 @@ _CAL_STEP_DAYS = 16
                AS day_bucket
       FROM chunk
     ), daily AS (
-      SELECT epoch_us(ts) // {_CAL_DAY_US} AS day_bucket, COUNT(*) AS n
+      SELECT epoch_us(ts) // {DAY_US} AS day_bucket, COUNT(*) AS n
       FROM events GROUP BY 1
     )
     SELECT c.day_bucket,
-           c.day_bucket * {_CAL_DAY_US} AS day_start_us,
+           c.day_bucket * {DAY_US} AS day_start_us,
            CAST(COALESCE(d.n, 0) AS BIGINT) AS n_events,
            CAST(SUM(COALESCE(d.n, 0)) OVER (
              ORDER BY c.day_bucket ROWS UNBOUNDED PRECEDING
@@ -609,7 +609,7 @@ def q_recursive_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         WITH RECURSIVE chunk(lo, hi) AS (
-          SELECT MIN(ts_us div {_CAL_DAY_US}), MAX(ts_us div {_CAL_DAY_US})
+          SELECT MIN(ts_us div {DAY_US}), MAX(ts_us div {DAY_US})
           FROM events_v
           UNION ALL
           SELECT lo + {_CAL_STEP_DAYS}, hi FROM chunk
@@ -619,11 +619,11 @@ def q_recursive_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS day_bucket
           FROM chunk
         ), daily AS (
-          SELECT ts_us div {_CAL_DAY_US} AS day_bucket, COUNT(*) AS n
+          SELECT ts_us div {DAY_US} AS day_bucket, COUNT(*) AS n
           FROM events_v GROUP BY 1
         )
         SELECT c.day_bucket,
-               c.day_bucket * {_CAL_DAY_US} AS day_start_us,
+               c.day_bucket * {DAY_US} AS day_start_us,
                CAST(COALESCE(d.n, 0) AS BIGINT) AS n_events,
                CAST(SUM(COALESCE(d.n, 0)) OVER (
                  ORDER BY c.day_bucket ROWS UNBOUNDED PRECEDING

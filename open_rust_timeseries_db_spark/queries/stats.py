@@ -43,9 +43,8 @@ from open_rust_timeseries_db_spark.queries.helpers import (
 )
 from open_rust_timeseries_db_spark.queries.registry import query
 from open_rust_timeseries_db_spark.sources.catalog import load_table
+from open_rust_timeseries_db_spark.sources.layout import DAY_US, HOUR_US
 
-_HOUR_US = 3_600_000_000
-_DAY_US = 86_400_000_000
 # 2024-01-01 00:00:00 UTC in epoch-µs: the pinned x-axis origin for the
 # trend fit (any fixed literal works; this one keeps |x| small so the
 # fixed-point x·y products stay far inside the dsum per-row bound).
@@ -137,7 +136,7 @@ _ACF_LAGS = 5
     "q_acf",
     f"""
     WITH e AS (
-      SELECT user_id, epoch_us(ts) // {_HOUR_US} AS bucket_hour,
+      SELECT user_id, epoch_us(ts) // {HOUR_US} AS bucket_hour,
              CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT) AS vfx
       FROM events
     ), bars AS (
@@ -199,7 +198,7 @@ def q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = (
         ev.select(
             "user_id",
-            F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"),
+            F.expr(f"ts_us div {HOUR_US}").alias("bucket_hour"),
             _scaled_long(F.col("value")).alias("vfx"),
         )
         .groupBy("user_id", "bucket_hour")
@@ -309,8 +308,8 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_hourofweek_profile",
     f"""
     WITH e AS (
-      SELECT ((epoch_us(ts) // {_DAY_US}) + 4) % 7 AS dow,
-             (epoch_us(ts) % {_DAY_US}) // {_HOUR_US} AS hour_of_day,
+      SELECT ((epoch_us(ts) // {DAY_US}) + 4) % 7 AS dow,
+             (epoch_us(ts) % {DAY_US}) // {HOUR_US} AS hour_of_day,
              CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT) AS vfx
       FROM events
     ), cells AS (
@@ -342,9 +341,9 @@ def q_hourofweek_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         ev.select(
             (
-                (F.expr(f"ts_us div {_DAY_US}") + F.lit(4)) % F.lit(7)
+                (F.expr(f"ts_us div {DAY_US}") + F.lit(4)) % F.lit(7)
             ).alias("dow"),
-            F.expr(f"(ts_us % {_DAY_US}) div {_HOUR_US}").alias(
+            F.expr(f"(ts_us % {DAY_US}) div {HOUR_US}").alias(
                 "hour_of_day"
             ),
             _scaled_long(F.col("value")).alias("vfx"),

@@ -31,9 +31,7 @@ from open_rust_timeseries_db_spark.queries.helpers import (
     sql_dsum,
 )
 from open_rust_timeseries_db_spark.queries.registry import query
-
-_HOUR_US = 3_600_000_000
-_DAY_US = 86_400_000_000
+from open_rust_timeseries_db_spark.sources.layout import DAY_US, HOUR_US
 
 
 def ohlc_hourly_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,12 +57,12 @@ def ohlc_hourly_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         k = ev.select(
             "user_id",
-            F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"),
+            F.expr(f"ts_us div {HOUR_US}").alias("bucket_hour"),
             "value",
             (F.col("ts_us") * 1000 + F.col("event_id") % 1000).alias("ord"),
         )
         return k.groupBy("user_id", "bucket_hour").agg(
-            (F.first("bucket_hour") * _HOUR_US).alias("bucket_start_us"),
+            (F.first("bucket_hour") * HOUR_US).alias("bucket_start_us"),
             F.min_by("value", "ord").alias("open_v"),
             F.max("value").alias("high_v"),
             F.min("value").alias("low_v"),
@@ -105,13 +103,13 @@ def ohlc_increment(bars: DataFrame, new_ticks: DataFrame) -> DataFrame:
     delta = (
         new_ticks.select(
             "user_id",
-            F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"),
+            F.expr(f"ts_us div {HOUR_US}").alias("bucket_hour"),
             "value",
             (F.col("ts_us") * 1000 + F.col("event_id") % 1000).alias("ord"),
         )
         .groupBy("user_id", "bucket_hour")
         .agg(
-            (F.first("bucket_hour") * _HOUR_US).alias("bucket_start_us"),
+            (F.first("bucket_hour") * HOUR_US).alias("bucket_start_us"),
             F.min_by("value", "ord").alias("open_v"),
             F.max("value").alias("high_v"),
             F.min("value").alias("low_v"),
@@ -148,13 +146,13 @@ def ohlc_increment(bars: DataFrame, new_ticks: DataFrame) -> DataFrame:
     f"""
     WITH k AS (
       SELECT user_id,
-             epoch_us(ts) // {_HOUR_US} AS bucket_hour,
+             epoch_us(ts) // {HOUR_US} AS bucket_hour,
              value,
              epoch_us(ts) * 1000 + event_id % 1000 AS ord
       FROM events
     )
     SELECT user_id, bucket_hour,
-           bucket_hour * {_HOUR_US} AS bucket_start_us,
+           bucket_hour * {HOUR_US} AS bucket_start_us,
            arg_min(value, ord) AS open_v,
            MAX(value) AS high_v,
            MIN(value) AS low_v,
@@ -194,7 +192,7 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH k AS (
       SELECT user_id,
-             epoch_us(ts) // {_DAY_US} AS day_bucket,
+             epoch_us(ts) // {DAY_US} AS day_bucket,
              value,
              epoch_us(ts) * 1000 + event_id % 1000 AS ord
       FROM events
@@ -223,7 +221,7 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ohlc_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ohlc_hourly_ckpt(spark, sf_dir).withColumn(
-        "day_bucket", F.expr(f"bucket_hour div {_DAY_US // _HOUR_US}")
+        "day_bucket", F.expr(f"bucket_hour div {DAY_US // HOUR_US}")
     )
     return hourly.groupBy("user_id", "day_bucket").agg(
         F.min_by("open_v", "open_ord").alias("open_v"),
@@ -239,7 +237,7 @@ def q_ohlc_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_gapfill_locf",
     f"""
     WITH e AS (
-      SELECT user_id, epoch_us(ts) // {_HOUR_US} AS bucket_hour, value
+      SELECT user_id, epoch_us(ts) // {HOUR_US} AS bucket_hour, value
       FROM events
     ), hourly AS (
       SELECT user_id, bucket_hour, {sql_davg("value")} AS avg_value
@@ -254,7 +252,7 @@ def q_ohlc_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM spine s LEFT JOIN hourly h USING (user_id, bucket_hour)
     )
     SELECT user_id, bucket_hour,
-           bucket_hour * {_HOUR_US} AS bucket_start_us,
+           bucket_hour * {HOUR_US} AS bucket_start_us,
            avg_value,
            last_value(avg_value IGNORE NULLS) OVER (
              PARTITION BY user_id ORDER BY bucket_hour
@@ -277,7 +275,7 @@ def q_ohlc_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_us(spark, sf_dir).select(
-        "user_id", F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"), "value"
+        "user_id", F.expr(f"ts_us div {HOUR_US}").alias("bucket_hour"), "value"
     )
     # The hourly aggregate feeds both the gap-fill expansion and the
     # spine bounds; checkpointing the tiny bucketed table (symbols ×
@@ -369,7 +367,7 @@ def q_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return body.unionByName(leading).select(
         "user_id",
         "bucket_hour",
-        (F.col("bucket_hour") * _HOUR_US).alias("bucket_start_us"),
+        (F.col("bucket_hour") * HOUR_US).alias("bucket_start_us"),
         "avg_value",
         "filled_value",
         F.when(F.col("avg_value").isNull(), 1).otherwise(0).cast("int").alias("is_gap"),
@@ -380,7 +378,7 @@ def q_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_gapfill_interp",
     f"""
     WITH e AS (
-      SELECT user_id, epoch_us(ts) // {_HOUR_US} AS bucket_hour, value
+      SELECT user_id, epoch_us(ts) // {HOUR_US} AS bucket_hour, value
       FROM events
     ), hourly AS (
       SELECT user_id, bucket_hour, {sql_davg("value")} AS avg_value
@@ -408,7 +406,7 @@ def q_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
                        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
     )
     SELECT user_id, bucket_hour,
-           bucket_hour * {_HOUR_US} AS bucket_start_us,
+           bucket_hour * {HOUR_US} AS bucket_start_us,
            avg_value,
            CASE WHEN avg_value IS NOT NULL THEN avg_value
                 WHEN prev_v IS NULL OR next_v IS NULL THEN NULL
@@ -455,7 +453,7 @@ def q_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cells (before a symbol's first observation) come from the same
     # per-symbol bounds cross-join as before.
     ev = events_us(spark, sf_dir).select(
-        "user_id", F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"), "value"
+        "user_id", F.expr(f"ts_us div {HOUR_US}").alias("bucket_hour"), "value"
     )
     hourly = (
         ev.groupBy("user_id", "bucket_hour")
@@ -539,7 +537,7 @@ def q_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return body.unionByName(leading).select(
         "user_id",
         "bucket_hour",
-        (F.col("bucket_hour") * _HOUR_US).alias("bucket_start_us"),
+        (F.col("bucket_hour") * HOUR_US).alias("bucket_start_us"),
         "avg_value",
         "interp_value",
         F.when(F.col("avg_value").isNull(), 1)
@@ -554,7 +552,7 @@ def q_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH e AS (
       SELECT user_id, epoch_us(ts) AS ts_us,
-             epoch_us(ts) // {_DAY_US} AS day_bucket, value, event_id
+             epoch_us(ts) // {DAY_US} AS day_bucket, value, event_id
       FROM events
     ), d AS (
       SELECT user_id, day_bucket, ts_us, value,
@@ -603,7 +601,7 @@ def q_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_us(spark, sf_dir).select(
         "user_id",
         "ts_us",
-        F.expr(f"ts_us div {_DAY_US}").alias("day_bucket"),
+        F.expr(f"ts_us div {DAY_US}").alias("day_bucket"),
         "value",
         "event_id",
     )
@@ -652,7 +650,7 @@ def q_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH e AS (
       SELECT user_id, epoch_us(ts) AS ts_us,
-             epoch_us(ts) // {_DAY_US} AS day_bucket, value
+             epoch_us(ts) // {DAY_US} AS day_bucket, value
       FROM events
     ), d AS (
       SELECT user_id, day_bucket, value,
@@ -660,7 +658,7 @@ def q_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                LEAD(ts_us) OVER (
                  PARTITION BY user_id, day_bucket ORDER BY ts_us
                ),
-               (day_bucket + 1) * {_DAY_US}
+               (day_bucket + 1) * {DAY_US}
              ) - ts_us AS dt_us
       FROM e
     )
@@ -687,7 +685,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_us(spark, sf_dir).select(
         "user_id",
         "ts_us",
-        F.expr(f"ts_us div {_DAY_US}").alias("day_bucket"),
+        F.expr(f"ts_us div {DAY_US}").alias("day_bucket"),
         "value",
     )
     lead_w = Window.partitionBy("user_id", "day_bucket").orderBy("ts_us")
@@ -698,7 +696,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.coalesce(
                 F.lead("ts_us").over(lead_w),
-                (F.col("day_bucket") + 1) * _DAY_US,
+                (F.col("day_bucket") + 1) * DAY_US,
             )
             - F.col("ts_us")
         ).alias("dt_us"),
@@ -814,7 +812,7 @@ _ORD_SQL = "epoch_us(ts) * 1000 + event_id % 1000"
     f"""
     WITH k AS (
       SELECT user_id,
-             epoch_us(ts) // {_HOUR_US} AS bucket_hour,
+             epoch_us(ts) // {HOUR_US} AS bucket_hour,
              value,
              {_ORD_SQL} AS ord
       FROM events
@@ -855,7 +853,7 @@ _ORD_SQL = "epoch_us(ts) * 1000 + event_id % 1000"
 def q_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = events_us(spark, sf_dir).select(
         "user_id",
-        F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"),
+        F.expr(f"ts_us div {HOUR_US}").alias("bucket_hour"),
         "value",
         _ord_col(),
     )
@@ -914,7 +912,7 @@ _HEARTBEAT_US = 1_800_000_000
     f"""
     WITH e AS (
       SELECT user_id, epoch_us(ts) AS ts_us,
-             epoch_us(ts) // {_DAY_US} AS day_bucket,
+             epoch_us(ts) // {DAY_US} AS day_bucket,
              {_ORD_SQL} AS ord
       FROM events
     ), d AS (
@@ -928,15 +926,15 @@ _HEARTBEAT_US = 1_800_000_000
            COUNT(*) AS n_beats,
            CAST(SUM(LEAST(
              {_HEARTBEAT_US},
-             COALESCE(nxt, (day_bucket + 1) * {_DAY_US}) - ts_us
+             COALESCE(nxt, (day_bucket + 1) * {DAY_US}) - ts_us
            )) AS BIGINT) AS live_us,
            CAST(SUM(CASE WHEN nxt IS NOT NULL
                           AND nxt - ts_us > {_HEARTBEAT_US}
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_dead_gaps,
            CAST(CAST(SUM(LEAST(
              {_HEARTBEAT_US},
-             COALESCE(nxt, (day_bucket + 1) * {_DAY_US}) - ts_us
-           )) AS BIGINT) AS DOUBLE) / {_DAY_US}.0 AS live_ratio
+             COALESCE(nxt, (day_bucket + 1) * {DAY_US}) - ts_us
+           )) AS BIGINT) AS DOUBLE) / {DAY_US}.0 AS live_ratio
     FROM d GROUP BY 1, 2
     """,
     doc="Heartbeat/uptime aggregation (the TimescaleDB heartbeat_agg "
@@ -956,7 +954,7 @@ def q_heartbeat_uptime(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = events_us(spark, sf_dir).select(
         "user_id",
         "ts_us",
-        F.expr(f"ts_us div {_DAY_US}").alias("day_bucket"),
+        F.expr(f"ts_us div {DAY_US}").alias("day_bucket"),
         _ord_col(),
     )
     w = Window.partitionBy("user_id", "day_bucket").orderBy("ts_us", "ord")
@@ -966,7 +964,7 @@ def q_heartbeat_uptime(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day_bucket",
         F.least(
             F.lit(_HEARTBEAT_US),
-            F.coalesce(nxt, (F.col("day_bucket") + 1) * _DAY_US)
+            F.coalesce(nxt, (F.col("day_bucket") + 1) * DAY_US)
             - F.col("ts_us"),
         ).alias("__live"),
         (nxt.isNotNull() & (nxt - F.col("ts_us") > _HEARTBEAT_US))
@@ -984,7 +982,7 @@ def q_heartbeat_uptime(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_beats",
         "live_us",
         "n_dead_gaps",
-        (F.col("live_us").cast("double") / F.lit(float(_DAY_US))).alias(
+        (F.col("live_us").cast("double") / F.lit(float(DAY_US))).alias(
             "live_ratio"
         ),
     )
@@ -995,14 +993,14 @@ def q_heartbeat_uptime(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH e AS (
       SELECT user_id, event_type, epoch_us(ts) AS ts_us,
-             epoch_us(ts) // {_DAY_US} AS day_bucket,
+             epoch_us(ts) // {DAY_US} AS day_bucket,
              {_ORD_SQL} AS ord
       FROM events
     ), d AS (
       SELECT event_type,
              COALESCE(LEAD(ts_us) OVER (
                PARTITION BY user_id, day_bucket ORDER BY ts_us, ord
-             ), (day_bucket + 1) * {_DAY_US}) - ts_us AS dur_us
+             ), (day_bucket + 1) * {DAY_US}) - ts_us AS dur_us
       FROM e
     )
     SELECT event_type,
@@ -1028,7 +1026,7 @@ def q_state_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_type",
         "ts_us",
-        F.expr(f"ts_us div {_DAY_US}").alias("day_bucket"),
+        F.expr(f"ts_us div {DAY_US}").alias("day_bucket"),
         _ord_col(),
     )
     w = Window.partitionBy("user_id", "day_bucket").orderBy("ts_us", "ord")
@@ -1037,7 +1035,7 @@ def q_state_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.coalesce(
                 F.lead("ts_us").over(w),
-                (F.col("day_bucket") + 1) * _DAY_US,
+                (F.col("day_bucket") + 1) * DAY_US,
             )
             - F.col("ts_us")
         ).alias("dur_us"),
@@ -1063,7 +1061,7 @@ _EWMA_ALPHA = 0.3
     f"""
     WITH e AS (
       SELECT user_id,
-             epoch_us(ts) // {_DAY_US} AS day_bucket,
+             epoch_us(ts) // {DAY_US} AS day_bucket,
              value,
              {_ORD_SQL} AS ord
       FROM events
@@ -1094,7 +1092,7 @@ _EWMA_ALPHA = 0.3
 def q_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = events_us(spark, sf_dir).select(
         "user_id",
-        F.expr(f"ts_us div {_DAY_US}").alias("day_bucket"),
+        F.expr(f"ts_us div {DAY_US}").alias("day_bucket"),
         "value",
         _ord_col(),
     )
@@ -1178,7 +1176,7 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH k AS (
       SELECT user_id,
-             epoch_us(ts) // {_DAY_US} AS day_bucket,
+             epoch_us(ts) // {DAY_US} AS day_bucket,
              value,
              {_ORD_SQL} AS ord
       FROM events
@@ -1217,7 +1215,7 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = events_us(spark, sf_dir).select(
         "user_id",
-        F.expr(f"ts_us div {_DAY_US}").alias("day_bucket"),
+        F.expr(f"ts_us div {DAY_US}").alias("day_bucket"),
         "value",
         _ord_col(),
     )
@@ -1251,7 +1249,7 @@ def q_top_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH e AS (
       SELECT user_id,
-             epoch_us(ts) // {_DAY_US} AS day_bucket,
+             epoch_us(ts) // {DAY_US} AS day_bucket,
              CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT) AS xs,
              {_ORD_SQL} AS ord
       FROM events
@@ -1305,7 +1303,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = events_us(spark, sf_dir).select(
         "user_id",
-        F.expr(f"ts_us div {_DAY_US}").alias("day_bucket"),
+        F.expr(f"ts_us div {DAY_US}").alias("day_bucket"),
         _scaled_long(F.col("value")).alias("xs"),
         _ord_col(),
     )
@@ -1356,7 +1354,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One mid-span day of the testdata's fixed January-2024 month (all sf
 # tiers share the generator's clock): 2024-01-08 UTC.
 _WINDOW_LO_US = 1_704_672_000_000_000
-_WINDOW_HI_US = _WINDOW_LO_US + _DAY_US
+_WINDOW_HI_US = _WINDOW_LO_US + DAY_US
 
 
 @query(
@@ -1395,8 +1393,8 @@ def q_time_window_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # A different mid-span day (2024-01-15) for the append-built layout's
 # window, so the two layout queries don't share an answer.
-_APPEND_LO_US = _WINDOW_LO_US + 7 * _DAY_US
-_APPEND_HI_US = _APPEND_LO_US + _DAY_US
+_APPEND_LO_US = _WINDOW_LO_US + 7 * DAY_US
+_APPEND_HI_US = _APPEND_LO_US + DAY_US
 
 
 @query(
@@ -1483,11 +1481,11 @@ _MONTH_LO_US = 1_704_067_200_000_000
 @query(
     "q_chunk_dpp_join",
     f"""
-    SELECT (epoch_us(ts) // {_DAY_US}) * {_DAY_US} AS chunk_us,
+    SELECT (epoch_us(ts) // {DAY_US}) * {DAY_US} AS chunk_us,
            COUNT(*) AS n,
            {sql_dsum("value")} AS sum_value
     FROM events
-    WHERE (epoch_us(ts) // {_DAY_US}) % 7 = 2
+    WHERE (epoch_us(ts) // {DAY_US}) % 7 = 2
     GROUP BY 1
     """,
     doc="DYNAMIC partition pruning over the chunked layout: a "
@@ -1514,9 +1512,9 @@ def q_chunk_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = (
         spark.range(31)
         .select(
-            (F.lit(_MONTH_LO_US) + F.col("id") * _DAY_US).alias("chunk_us"),
+            (F.lit(_MONTH_LO_US) + F.col("id") * DAY_US).alias("chunk_us"),
             F.pmod(
-                F.lit(_MONTH_LO_US // _DAY_US) + F.col("id"), F.lit(7)
+                F.lit(_MONTH_LO_US // DAY_US) + F.col("id"), F.lit(7)
             ).alias("dow"),
         )
         .filter(F.col("dow") == 2)

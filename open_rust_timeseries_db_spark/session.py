@@ -167,8 +167,8 @@ def get_spark(
             "spark.local.dir",
             os.environ.get("SPARK_LOCAL_DIRS", _default_local_dir()),
         )
-        # Catalog tables (bucketed warehouse, sources/warehouse.py) go
-        # to a scratch dir, never the repo working directory.
+        # Spark's catalog directory goes to a scratch dir, never the
+        # repo working directory.
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),

@@ -122,8 +122,6 @@ TABLES: dict[str, T.StructType] = {
     ),
 }
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 
 def _ensure_read_confs(spark: SparkSession) -> None:
     """The driver may hand us a vanilla session; reads depend on these.

@@ -60,6 +60,10 @@ def run_available_now_to_memory(
     bounded windowed aggregates; a real deployment sizes this to
     state-bytes / executor-memory-budget and scales it by re-keying the
     checkpoint, not by AQE.
+
+    Raises ``TimeoutError`` when the drain has not finished within
+    ``timeout_s``: the query is stopped and its partial sink rows are
+    dropped, never returned as a result.
     """
     name = f"mem_{uuid.uuid4().hex[:12]}"
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -84,7 +88,7 @@ def run_available_now_to_memory(
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     try:
-        q.awaitTermination(timeout_s)
+        finished = q.awaitTermination(timeout_s)
     finally:
         try:
             LAST_DRAIN_PROGRESS[:] = [
@@ -120,6 +124,11 @@ def run_available_now_to_memory(
             jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
         except Exception:  # pragma: no cover - depends on Spark internals
             pass
+    if not finished:
+        spark.catalog.dropTempView(name)
+        raise TimeoutError(
+            f"streaming drain {name} did not finish within {timeout_s} s"
+        )
     # The memory sink pins its rows on the DRIVER for as long as its
     # temp view stays registered — across a 101-query bench sweep the
     # per-user drains (session/OHLC, ~1M rows each at sf1, two passes

@@ -268,61 +268,6 @@ def test_get_stats_contract(spark):
     assert tiny.get_stats()["n_writes"] == 1
 
 
-def test_plan_memo_skips_streaming_and_iterative_tags():
-    """The prepared-plan memo must never wrap queries that do real work
-    at build time: 'streaming' (the drain IS the query) and 'iterative'
-    (driver-side loops) are tag-guarded even if the author forgets
-    memo_plan=False (round-5 advice: q_dedup_clusters needed a manual
-    opt-out despite carrying the tag)."""
-    from open_rust_timeseries_db_spark.queries import all_queries
-
-    qs = all_queries()
-    for spec in qs.values():
-        if {"streaming", "iterative"} & set(spec.tags):
-            assert not hasattr(spec.fn, "__wrapped__"), (
-                f"{spec.name}: memoized despite {spec.tags}"
-            )
-
-
-def test_plan_memo_is_bounded():
-    """The per-query plans dict must not grow without bound across
-    sf_dirs (round-5 advice): after touching >4 distinct sf_dir keys,
-    only the most recent 4 are retained."""
-    from open_rust_timeseries_db_spark.queries.registry import (
-        REGISTRY,
-        query,
-    )
-
-    calls = []
-
-    try:
-        @query("q_memo_bound_probe", oracle=None, tags=("test",))
-        def probe(spark, sf_dir):
-            calls.append(sf_dir)
-            return object()  # stand-in; memo never inspects the value
-
-        fn = REGISTRY["q_memo_bound_probe"].fn
-
-        class _SC:
-            applicationId = "app-memo-bound"
-
-        class _Spark:
-            sparkContext = _SC()
-
-        s = _Spark()
-        for i in range(6):
-            fn(s, f"/tmp/sfdir{i}")
-        assert len(calls) == 6
-        # Oldest two evicted; re-requesting dir 0 rebuilds (miss), the
-        # newest four hit the memo.
-        fn(s, "/tmp/sfdir5")
-        assert len(calls) == 6, "newest entry should hit the memo"
-        fn(s, "/tmp/sfdir0")
-        assert len(calls) == 7, "evicted entry should rebuild"
-    finally:
-        REGISTRY.pop("q_memo_bound_probe", None)
-
-
 def test_flush_failure_restores_fifo_and_clears_backpressure(spark, tmp_path):
     """A failed flush must restore the drained rows in order, clear the
     in-flight flag, and leave the table fully usable — the contract

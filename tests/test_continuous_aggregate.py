@@ -14,10 +14,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from open_rust_timeseries_db_spark.queries.helpers import events_us
-from open_rust_timeseries_db_spark.queries.timeseries import (
-    _HOUR_US,
-    ohlc_increment,
-)
+from open_rust_timeseries_db_spark.queries.timeseries import ohlc_increment
+from open_rust_timeseries_db_spark.sources.layout import HOUR_US
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -25,14 +23,14 @@ SF_DIR = "/root/testdata/sf0.01"
 def _full_build(ticks):
     k = ticks.select(
         "user_id",
-        F.expr(f"ts_us div {_HOUR_US}").alias("bucket_hour"),
+        F.expr(f"ts_us div {HOUR_US}").alias("bucket_hour"),
         "value",
         (F.col("ts_us") * 1000 + F.col("event_id") % 1000).alias("ord"),
     )
     from open_rust_timeseries_db_spark.queries.helpers import dsum
 
     return k.groupBy("user_id", "bucket_hour").agg(
-        (F.first("bucket_hour") * _HOUR_US).alias("bucket_start_us"),
+        (F.first("bucket_hour") * HOUR_US).alias("bucket_start_us"),
         F.min_by("value", "ord").alias("open_v"),
         F.max("value").alias("high_v"),
         F.min("value").alias("low_v"),
@@ -101,7 +99,7 @@ def test_untouched_bars_pass_through_unaggregated(spark):
         "user_id bigint, ts_us bigint, value double, event_id bigint",
     )
     out = ohlc_increment(bars, batch)
-    key = (one["user_id"], (one["ts_us"] + 1) // _HOUR_US)
+    key = (one["user_id"], (one["ts_us"] + 1) // HOUR_US)
     before = {
         (r["user_id"], r["bucket_hour"]): r for r in bars.collect()
     }

@@ -143,3 +143,26 @@ def test_write_batch_idempotent_replay(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 200  # not 300: the replay overwrote, not appended
     assert got.filter(F.col("batch_id") == 0).count() == 100
+
+
+def test_drain_timeout_raises_instead_of_returning_partial_rows(spark):
+    """A drain that outlives its timeout must fail loud: the query is
+    stopped and TimeoutError names it, instead of the partial memory-sink
+    rows coming back as if they were the result."""
+    # One aggregate row per micro-batch, and each emitted row sleeps 3 s
+    # in the JVM: the drain cannot finish inside the 1 s timeout.
+    slow = (
+        events_file_stream(spark, SF_DIR)
+        .groupBy()
+        .count()
+        .select(
+            "count",
+            F.expr("reflect('java.lang.Thread', 'sleep', CAST(3000 AS BIGINT))")
+            .alias("slept"),
+        )
+    )
+    before = {t.name for t in spark.catalog.listTables()}
+    with pytest.raises(TimeoutError, match=r"mem_\w+ did not finish within 1 s"):
+        run_available_now_to_memory(spark, slow, mode="complete", timeout_s=1)
+    assert not [q for q in spark.streams.active if q.name.startswith("mem_")]
+    assert {t.name for t in spark.catalog.listTables()} == before
