@@ -330,10 +330,13 @@ def _toks(text) -> list[str]:
 
 def _kernel_input(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Spread the scan for kernel parallelism, sized to amortize the
-    Python-worker round trip: half the cores (measured sweet spot for
-    the testdata corpus — 32 tasks over 5k docs pay more in worker
-    latency than they win in parallelism). A multi-split corpus at
-    scale keeps its natural splits (spread_scan no-ops)."""
+    Python-worker round trip: half the default parallelism, but at
+    least 8 tasks (2x the cores on a 4-core host). Half the cores was
+    the measured sweet spot for the testdata corpus on a 32-core host
+    (32 tasks over 5k docs paid more in worker latency than they won
+    in parallelism), measured while every Python task still paid the
+    per-task archive re-read that ``pydaemon`` removes. A multi-split
+    corpus at scale keeps its natural splits (spread_scan no-ops)."""
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
     return spread_scan(docs, partitions=max(8, parallelism // 2)).select(
         id_col, text_col

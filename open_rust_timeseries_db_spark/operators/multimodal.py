@@ -7,8 +7,9 @@ is that model made first-class for image/audio/video payloads at 100 TB:
 
 - payloads are ``BinaryType`` columns with typed metadata alongside;
 - decode / feature-extraction runs as Arrow-batched ``mapInPandas``
-  (one Python process per partition, columnar transfer — never
-  row-at-a-time UDFs);
+  (columnar transfer — never row-at-a-time UDFs) on Python workers
+  that the daemon pools and reuses across partitions and queries, not
+  one process per partition;
 - :func:`decode_image` is a REAL decoder for the one raster format the
   standard library can carry without codec packages: PNG (zlib inflate
   + per-spec unfiltering in numpy). PIL/opencv/ffmpeg are not in this

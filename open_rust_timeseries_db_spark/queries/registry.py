@@ -60,38 +60,48 @@ REGISTRY: dict[str, QuerySpec] = {}
 # exactly its own declared overrides, and nothing leaks past the next
 # query build — the same per-build scoping ``load_table`` already uses
 # for the parquet read confs. Keyed by applicationId so baselines from
-# one session are never replayed into another.
-_ACTIVE_OVERRIDES: dict[str, dict[str, str | None]] = {}
+# one session are never replayed into another; each entry holds the
+# overriding query's name and its {key: baseline} map.
+_ACTIVE_OVERRIDES: dict[str, tuple[str, dict[str, str | None]]] = {}
 
 
 def _apply_session_confs(
-    spark: SparkSession, confs: dict[str, str] | None
+    spark: SparkSession, name: str, confs: dict[str, str] | None
 ) -> None:
+    """Restore the previous query's overrides, then apply ``name``'s.
+
+    A conf that cannot be set (a static conf, a bad value) raises,
+    naming the query and the key: running a query under the wrong conf
+    would still pass it off as itself.
+    """
     app = spark.sparkContext.applicationId
-    prior = _ACTIVE_OVERRIDES.pop(app, {})
+    owner, prior = _ACTIVE_OVERRIDES.pop(app, ("", {}))
     for key, baseline in prior.items():
         try:
             if baseline is None:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, baseline)
-        except Exception:
-            pass
+        except Exception as exc:
+            raise RuntimeError(
+                f"{name}: cannot restore session conf {key} after {owner}"
+            ) from exc
     if not confs:
         return
     applied: dict[str, str | None] = {}
+    _ACTIVE_OVERRIDES[app] = (name, applied)
     for key, value in confs.items():
         try:
-            try:
-                baseline = spark.conf.get(key)
-            except Exception:
-                baseline = None
-            spark.conf.set(key, value)
-            applied[key] = baseline
+            baseline = spark.conf.get(key)
         except Exception:
-            pass
-    if applied:
-        _ACTIVE_OVERRIDES[app] = applied
+            baseline = None  # no value yet: restore by unsetting
+        try:
+            spark.conf.set(key, value)
+        except Exception as exc:
+            raise RuntimeError(
+                f"{name}: cannot set session conf {key}={value!r}"
+            ) from exc
+        applied[key] = baseline
 
 
 def query(
@@ -137,7 +147,7 @@ def query(
         def confed(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
             # Always runs — a query with no overrides still restores the
             # previous query's, which is what scopes them.
-            _apply_session_confs(spark, session_confs)
+            _apply_session_confs(spark, name, session_confs)
             return fn(spark, sf_dir, **kwargs)
 
         # Copy identity by hand, NOT functools.wraps: wraps() sets
@@ -187,7 +197,7 @@ def query(
                 else:
                     # Cache hit skips the build, but the conf scope must
                     # still roll over to THIS query's declared state.
-                    _apply_session_confs(spark, session_confs)
+                    _apply_session_confs(spark, name, session_confs)
                     plans.move_to_end(key)
                 return df
 

@@ -9,7 +9,9 @@ src/tests/integration_test.rs:169-173).
 
 ``tune_session`` is idempotent and safe to call on an externally-created
 session (the verification driver builds its own); it only sets runtime
-SQL confs.
+SQL confs (``RUNTIME_CONFS``). Static confs, such as the Python worker
+daemon and the codegen cache size, can only go on the builder, so only
+sessions ``get_spark`` builds get them.
 """
 
 from __future__ import annotations
@@ -83,16 +85,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     # All Python execution in this engine is Arrow-vectorized.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Whole-stage-codegen class cache. The default (100 entries) LRU
-    # THRASHES under a many-query workload: one analytics pass here
-    # compiles several hundred distinct codegen units (AQE re-plans
-    # multiply them), so by the time a unit recurs it has been evicted
-    # and janino recompiles it — measured 2.2x slower on a cold
-    # 15-query relational sweep (19.2 s -> 8.6 s) and a recompile tax
-    # on every warm pass. Compiled classes are ~10-100 KB; 10k entries
-    # is comfortably within driver memory and right for a long-lived
-    # multi-tenant session at any scale.
-    "spark.sql.codegen.cache.maxEntries": "10000",
     # Deterministic wall-time semantics for tests/oracles.
     "spark.sql.session.timeZone": "UTC",
 }
@@ -101,11 +93,7 @@ RUNTIME_CONFS: dict[str, str] = {
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply this engine's runtime confs to an existing session."""
     for key, value in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # A conf may be static on some builds; never fail the caller.
-            pass
+        spark.conf.set(key, value)
     return spark
 
 
@@ -120,6 +108,11 @@ def get_spark(
     Shuffle partitions default to the core count — right-sized for local
     benchmarking; on a real cluster this is AQE-coalesced anyway.
     """
+    # Imported here rather than at the top: the package __init__ imports
+    # this module, and runpy warns when the module it is about to run
+    # as ``__main__`` is already imported.
+    from open_rust_timeseries_db_spark import pydaemon
+
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
     master = f"local[{cpus}]" if cpus else "local[*]"
@@ -173,6 +166,20 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
         )
+        # Python workers fork from pydaemon, which skips PySpark's
+        # per-task re-read of unchanged zip archives (a fixed ~0.1 s per
+        # Python task on CPython 3.11).
+        .config("spark.python.daemon.module", pydaemon.__name__)
+        # Whole-stage-codegen class cache. The default (100 entries) LRU
+        # THRASHES under a many-query workload: one analytics pass here
+        # compiles several hundred distinct codegen units (AQE re-plans
+        # multiply them), so by the time a unit recurs it has been evicted
+        # and janino recompiles it — measured 2.2x slower on a cold
+        # 15-query relational sweep (19.2 s -> 8.6 s) and a recompile tax
+        # on every warm pass. Compiled classes are ~10-100 KB; 10k entries
+        # is comfortably within driver memory and right for a long-lived
+        # multi-tenant session at any scale.
+        .config("spark.sql.codegen.cache.maxEntries", "10000")
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
